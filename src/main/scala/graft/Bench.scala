@@ -433,7 +433,7 @@ object Bench {
         if (err.isEmpty) {
           err =
             try {
-              rows = spark.read.parquet(s"$outDir/data").count()
+              rows = graft.sources.Parquet.read(spark, s"$outDir/data").count()
               val expected = SparkEntry.queries("q_meds_pipeline")(spark, dir).count()
               mainRowCheck(rows, expected)
             } catch { case e: Throwable =>

@@ -39,7 +39,7 @@ object Main {
   def readMeds(spark: SparkSession, inDir: String): DataFrame =
     if (new java.io.File(s"$inDir/events.parquet").exists())
       Meds.fromEvents(graft.sources.Tables.events(spark, inDir))
-    else spark.read.parquet(inDir)
+    else graft.sources.Parquet.read(spark, inDir)
 
   /** Run `configText` over the input and write the resulting frames.
     * Returns the final pipeline state (for tests and embedding callers).

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.plans.Materialize.PinOps
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,10 +43,10 @@ object IvfIO {
   }
 
   def readCentroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/centroids")
+    Parquet.read(spark, s"$dir/centroids")
 
   def readCorpus(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/corpus")
+    Parquet.read(spark, s"$dir/corpus")
 
   /** Top-k cosine search against the persisted index. Each query probes
     * its `nProbe` nearest cells; the union of probed cells becomes a

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.plans.Materialize.PinOps
+import graft.sources.Parquet
 import graft.ann.{ProductQuantizer => PQ}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -85,7 +86,7 @@ object IvfPq {
   }
 
   def readPqModel(spark: SparkSession, dir: String, numBlocks: Int, k: Int, blockDim: Int): PQ.Model = {
-    val rows = spark.read.parquet(s"$dir/pq")
+    val rows = Parquet.read(spark, s"$dir/pq")
       .collect()
       .map(r => (r.getAs[Number](0).intValue(), r.getAs[Number](1).intValue(), r.getSeq[Double](2).toIndexedSeq))
     val byBlk = rows.groupBy(_._1)
@@ -108,8 +109,8 @@ object IvfPq {
       vecCol: String = "embedding"
   ): DataFrame =
     searchFrames(
-      spark.read.parquet(s"$dir/codes"),
-      spark.read.parquet(s"$dir/coarse"),
+      Parquet.read(spark, s"$dir/codes"),
+      Parquet.read(spark, s"$dir/coarse"),
       queries, pq, kTop, nProbe, idCol, vecCol)
 
   /** [[search]] over in-memory frames — `codes` is (id, codes, cid),

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,7 +161,7 @@ object LshIO {
   }
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/bands")
+    Parquet.read(spark, s"$dir/bands")
 
   /** Candidate near-dup pairs of a NEW batch against the stored index:
     * (id_new, id_index, n_bands_agree), id_new ≠ id_index. The batch's

@@ -18,7 +18,8 @@ object Normalize {
     *
     * `codeMetadata` must have `code/vocab_index` and either
     * (`values/mean`, `values/std`) or the sum/sum_sqd/n_occurrences triple.
-    * Vocabulary-sized → broadcast join, no fact-side shuffle.
+    * Vocabulary-sized → broadcast join, no fact-side shuffle. A zero
+    * `values/std` yields NaN (x = mean) or ±Inf, never an error.
     */
   def normalize(
       df: DataFrame,
@@ -33,12 +34,18 @@ object Normalize {
     val meta = withStats.select(
       (joinCols.map(col) :+ col("code/vocab_index") :+ col("values/mean") :+ col("values/std")): _*
     )
+    // The reference's polars `(x - mean) / std` is IEEE division: a code
+    // with zero spread (seen once, or constant) gives 0/0 = NaN and
+    // x/0 = ±Inf. ANSI `/` raises DIVIDE_BY_ZERO instead, so a zero std
+    // multiplies by pow(std, -1), which is ±Inf for ±0.
+    val centred = col(Meds.NumericValue) - col("values/mean")
+    val std = col("values/std")
     df.join(broadcast(meta), joinCols, "inner")
       .select(
         col(Meds.PatientId),
         col(Meds.Time),
         col("code/vocab_index").as(Meds.Code),
-        ((col(Meds.NumericValue) - col("values/mean")) / col("values/std"))
+        when(std === 0, centred * pow(std, -1)).otherwise(centred / std)
           .as(Meds.NumericValue)
       )
   }

@@ -52,6 +52,13 @@ object TimeDerived {
     * `dobFromCode("DOB")` for reference semantics, or e.g. the patient's
     * first observation time for datasets without explicit birth events.
     *
+    * @param dobExpr must return an AGGREGATE expression (min, max, first,
+    *   ...): it is evaluated inside `groupBy(patient_id).agg(...)`, so a
+    *   window or row-level expression fails at analysis. The fast path
+    *   below is chosen by reference identity: only the
+    *   [[dobFromFirstEvent]] value itself takes it, and a structurally
+    *   equal lambda takes the general path (same values, one more scan).
+    *
     * Shape: the per-patient DOB is a narrow AGGREGATE over the non-null-
     * time rows, null-safe-joined onto the distinct (patient, time) frame —
     * not a patient-window min. A partition-only window makes WindowExec

@@ -45,7 +45,7 @@ object AnyFormat {
     val path = resolve(spark, dir, prefix).getOrElse(
       throw new IllegalArgumentException(
         s"no $dir/$prefix.{${Extensions.mkString(",")}} exists"))
-    if (path.endsWith(".parquet")) spark.read.parquet(path)
+    if (path.endsWith(".parquet")) Parquet.read(spark, path)
     else {
       val r = spark.read.option("header", "true")
       schema.fold(r.option("inferSchema", "true"))(s => r.schema(s)).csv(path)

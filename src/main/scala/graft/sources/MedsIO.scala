@@ -45,7 +45,7 @@ object MedsIO {
     * partitions at planning time.
     */
   def readSharded(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 
   /** Identity of an extracted dataset, serialized to `metadata/dataset.json`
     * (reference: extract/finalize_MEDS_metadata.py:117-123 key set).
@@ -144,7 +144,7 @@ object MedsIO {
     val hadoopPath = new org.apache.hadoop.fs.Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + "._compact_tmp")
-    spark.read.parquet(path).coalesce(targetFiles)
+    Parquet.read(spark, path).coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     val old = new org.apache.hadoop.fs.Path(path + "._compact_old")
     fs.rename(hadoopPath, old)

@@ -15,7 +15,7 @@ object Tables {
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
   }
 
   /** events with `ts` as a proper (microsecond) TimestampType column,

@@ -192,6 +192,30 @@ class MedsOperatorsSpec extends SparkSpec {
     assert(out.count() == 4)
   }
 
+  test("normalize: a zero std gives the reference's IEEE results (NaN, ±Inf), not DIVIDE_BY_ZERO") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true") // the mode that used to raise
+    val t = Some(ts("2010-01-01 00:00:00"))
+    val df = Seq(
+      (1L, t, "ONCE", Some(4.0)),                                  // seen once: std 0
+      (1L, t, "FLAT", Some(2.0)), (2L, t, "FLAT", Some(2.0)), (3L, t, "FLAT", Some(2.0)),
+      (2L, t, "HR", Some(70.0)), (3L, t, "HR", Some(80.0))
+    ).toDF("patient_id", "time", "code", "numeric_value")
+    val meta = Vocabulary.lexicographicIndices(CodeMetadata.aggregate(df))
+    val idx = meta.select("code", "code/vocab_index").as[(String, Long)].collect().toMap
+    val z = Normalize.normalize(df, meta).select("code", "numeric_value").as[(Long, Double)]
+      .collect().groupBy(_._1).map { case (c, vs) => c -> vs.map(_._2).sorted.toSeq }
+    assert(z(idx("ONCE")).forall(_.isNaN))                         // (x - mean) = 0 -> 0/0
+    assert(z(idx("FLAT")).size == 3 && z(idx("FLAT")).forall(_.isNaN))
+    assert(z(idx("HR")) == Seq(-1.0, 1.0))                         // other codes unchanged
+    // x != mean over a zero std is ±Inf, a null value stays null
+    val given = Seq(("Z", 1L, 5.0, 0.0)).toDF("code", "code/vocab_index", "values/mean", "values/std")
+    val zs = Seq(Some(7.0), Some(3.0), Some(5.0), None)
+      .map(v => (1L, t, "Z", v)).toDF("patient_id", "time", "code", "numeric_value")
+    val got = Normalize.normalize(zs, given).select("numeric_value").as[Option[Double]].collect().toSeq
+    assert(got.flatten.filterNot(_.isNaN).sorted == Seq(Double.NegativeInfinity, Double.PositiveInfinity))
+    assert(got.count(_.exists(_.isNaN)) == 1 && got.count(_.isEmpty) == 1)
+  }
+
   test("lexicographicIndices ranks codes 1-based in sorted order") {
     val out = Vocabulary.lexicographicIndices(CodeMetadata.aggregate(fixture))
       .select("code", "code/vocab_index").as[(String, Long)].collect().toMap

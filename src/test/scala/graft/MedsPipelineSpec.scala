@@ -50,4 +50,19 @@ class MedsPipelineSpec extends SparkSpec {
     assert(result.data.count() == 2)
     assert(result.codeMetadata.count() == 1)
   }
+
+  test("run keeps single-occurrence and constant-valued codes: their values normalize to NaN") {
+    val t = java.sql.Timestamp.valueOf("2020-01-01 10:00:00")
+    val meds = Seq(
+      (1L, t, "ONCE", Some(4.0)),
+      (1L, t, "FLAT", Some(2.0)), (2L, t, "FLAT", Some(2.0)),
+      (1L, t, "HR", Some(60.0)), (2L, t, "HR", Some(80.0))
+    ).toDF("patient_id", "time", "code", "numeric_value")
+    val result = MedsPipeline.run(meds, MedsPipeline.Config(stddevCutoff = Some(3.0)))
+    val idx = result.codeMetadata.select("code", "code/vocab_index").as[(String, Long)].collect().toMap
+    val z = result.data.select("code", "numeric_value").as[(Long, Double)].collect()
+    assert(z.length == 5)
+    assert(z.filter(r => r._1 == idx("ONCE") || r._1 == idx("FLAT")).forall(_._2.isNaN))
+    assert(z.filter(_._1 == idx("HR")).map(_._2).sorted.toSeq == Seq(-1.0, 1.0))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Filters, Tokenize}
+import graft.operators.{Filters, TimeDerived, Tokenize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
@@ -62,6 +62,13 @@ class PlanShapeSpec extends SparkSpec {
     // see Filters.filterPatientsByNumMeasurements.)
     val out = Tokenize.seqsExploded(Filters.filterPatientsByNumMeasurements(cohort, 2))
     assert(countShuffles(out) == 1)
+  }
+
+  test("first-event ageEvents plan is sort-free (hash dedup, hash DOB aggregate, hash join)") {
+    // the dobFromFirstEvent fast path aggregates the deduplicated key
+    // frame instead of windowing the cohort; a window or sort-merge join
+    // creeping back would reintroduce a full-width sort
+    assert(countSorts(TimeDerived.ageEvents(cohort, TimeDerived.dobFromFirstEvent)) == 0)
   }
 
   test("no query plan has an unbounded single-partition window") {
