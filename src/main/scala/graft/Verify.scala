@@ -19,7 +19,8 @@ import scala.collection.mutable
   *     concurrently — correctness output is order-independent, so
   *     parallelism only buys more completed queries per wall-second;
   *   - `oracle_sql.json` is REWRITTEN ATOMICALLY after every completed
-  *     query, containing exactly the queries attempted so far — a killed
+  *     query, containing exactly the queries attempted so far, keys in
+  *     name order (two dumps compare with a plain `diff`) — a killed
   *     run leaves a consistent partial dump the DuckDB compare can
   *     consume as-is (a query that failed on the Spark side stays listed
   *     so it surfaces loudly as missing output, never vanishes);
@@ -81,8 +82,13 @@ object Verify {
     def remaining: Double = budgetSec - elapsedSec
 
     new java.io.File(outDir).mkdirs()
-    val names: Vector[String] = SparkEntry.queries.keys.toVector.sorted
+    val queries = SparkEntry.queries
+    val names: Vector[String] = queries.keys.toVector.sorted
       .filter(n => only.forall(_.contains(n)))
+    // each selected query's `"name": "sql"` JSON member, escaped once, in name order
+    val oracleMembers: Vector[(String, String)] = names.flatMap { n =>
+      SparkEntry.oracleSql.get(n).map(sql => n -> s"${jsonStr(n)}: ${jsonStr(sql)}")
+    }
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     names.foreach(queue.add)
 
@@ -96,9 +102,8 @@ object Verify {
     val skipped = mutable.LinkedHashMap.empty[String, String]
     var maxSec = 0.0
 
-    def oracleJson(): String = SparkEntry.oracleSql
-      .filter { case (k, _) => attempted.contains(k) }
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
+    def oracleJson(): String = oracleMembers
+      .collect { case (n, member) if attempted.contains(n) => member }
       .mkString("{", ",", "}")
     def progressJson(): String = {
       val secsJ = secs.toSeq.sortBy(_._1)
@@ -126,7 +131,7 @@ object Verify {
     def reserve: Double = lock.synchronized { math.max(20.0, 1.5 * maxSec) }
 
     def runOne(name: String): Unit = {
-      val fn = SparkEntry.queries(name)
+      val fn = queries(name)
       val t0 = System.nanoTime()
       val err =
         try {
